@@ -66,8 +66,13 @@ class DeadLetterQueue:
     log_only: bool = False
     partition_by: list[str] | None = None
 
-    def write(self, dlq_df: DataFrame, sink_writer=None) -> int:
-        """Write dead letters; returns the count routed (for metrics)."""
+    def write(
+        self, dlq_df: DataFrame, sink_writer=None, txn: dict[str, int] | None = None
+    ) -> int:
+        """Write dead letters; returns the count routed (for metrics).
+
+        ``txn`` (appId → offset) rides on the table commit, so a batch
+        whose offsets the DLQ table already stores is not appended again."""
         if self.table_location is None and not self.log_only:
             return 0  # noop DLQ: dead letters are dropped (default)
         out = dlq_df
@@ -87,6 +92,6 @@ class DeadLetterQueue:
         from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 
         result = DeltaLikeTable(self.table_location).write_batch(
-            out, partition_by=self.partition_by, operation="WRITE"
+            out, partition_by=self.partition_by, txn=txn, operation="WRITE"
         )
         return result.num_records

@@ -20,7 +20,7 @@ expressions):
    replacement for the reference's row-level parquet quarantine
    (src/writer.rs:618-639): conformance is decided by predicates
    *before* the write, so good rows never pay for bad ones.
-6. append + txn commit (sinks.DeltaLikeTable; real Delta when available)
+6. dead letters, then good rows, each committed with the batch's txn
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from pyspark.sql.types import StructType
 from kafka_delta_ingest_spark.config import IngestOptions, MessageFormat
 from kafka_delta_ingest_spark.coercions import apply_coercions
 from kafka_delta_ingest_spark.dead_letters import DeadLetterQueue, dead_letter_columns
+from kafka_delta_ingest_spark.metrics import DELTA_WRITE_FAILED
 from kafka_delta_ingest_spark.serialization import json_payload_to_struct
 from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 from kafka_delta_ingest_spark.transforms import Transformer
@@ -51,6 +52,7 @@ CONFORM_COL = "_kdi_conforms"
 ERROR_COL = "_kdi_error"
 RAW_COL = "_kdi_raw_value"
 PRE_COERCE_JSON_COL = "_kdi_pre_coerce_json"
+SKIP_COL = "_kdi_skip"
 
 
 @dataclass
@@ -146,8 +148,19 @@ class IngestJob:
         (binary), ``partition`` (int), ``offset`` (long), ``topic``
         (string), ``timestamp`` (timestamp), ``timestampType`` (int).
         Output: destination-schema columns + META columns + ERROR_COL
-        (non-null → dead letter) + CONFORM_COL.
+        (non-null → dead letter) + CONFORM_COL. Empty payloads are
+        skipped silently, not dead-lettered (reference src/lib.rs:847-852).
         """
+        return self._annotate(raw).filter(~F.col(SKIP_COL)).drop(SKIP_COL)
+
+    def _annotate(self, raw: DataFrame) -> DataFrame:
+        """:meth:`plan` over EVERY message: empty or NULL payloads stay,
+        flagged by SKIP_COL, because they still count as processed
+        offsets in the txn ledger. The decoders receive NULL in their
+        place, so no decoder parses them and no registry is asked for
+        their schema."""
+        skip = F.col("value").isNull() | (F.length("value") == 0)
+        value = F.when(~skip, F.col("value"))
         fmt = self.opts.message_format
         if fmt in (
             MessageFormat.AVRO,
@@ -168,13 +181,13 @@ class IngestJob:
                 # Per-message writer-schema resolution by the id in the
                 # wire-format header (reference src/serialization.rs:212-241).
                 text = avro_registry_to_json(
-                    F.col("value"),
+                    value,
                     self.opts.schema_registry_url,
                     fetcher=self.opts.schema_registry_fetcher,
                 )
             else:
                 text = avro_payload_to_json(
-                    F.col("value"),
+                    value,
                     avro_schema_json=self.opts.avro_schema_json,
                     confluent_wire_format=fmt == MessageFormat.AVRO_SCHEMA_REGISTRY,
                     soe_schemas=self.opts.soe_schemas
@@ -184,17 +197,13 @@ class IngestJob:
             parsed, err = json_text_to_struct(text, self.target_schema)
         else:
             parsed, err = json_payload_to_struct(
-                F.col("value"),
+                value,
                 self.target_schema,
                 gzip=fmt == MessageFormat.JSON_GZIP,
                 confluent_wire_format=fmt == MessageFormat.JSON_SCHEMA_REGISTRY,
             )
 
-        # Empty payloads are skipped silently, not dead-lettered
-        # (reference src/lib.rs:847-852).
-        nonempty = raw.filter(F.col("value").isNotNull() & (F.length("value") > 0))
-
-        staged = nonempty.select(
+        staged = raw.select(
             parsed.alias("_payload"),
             err.alias(ERROR_COL),
             F.col("value").alias(RAW_COL),
@@ -203,6 +212,7 @@ class IngestJob:
             F.col("topic").alias(META["topic"]),
             F.col("timestamp").alias(META["timestamp"]),
             F.col("timestampType").alias(META["timestamp_type"]),
+            skip.alias(SKIP_COL),
         )
 
         # Flatten payload to top level (the reference's message object),
@@ -211,6 +221,7 @@ class IngestJob:
             *[F.col(f"_payload.`{f.name}`").alias(f.name) for f in self.target_schema.fields],
             ERROR_COL,
             RAW_COL,
+            SKIP_COL,
             *[F.col(c) for c in META.values()],
         )
 
@@ -344,64 +355,67 @@ class IngestJob:
         return raw.filter(F.col("offset") > floor)
 
     def process_batch(self, raw: DataFrame, batch_id: int = 0) -> BatchMetrics:
-        """foreachBatch body: split, append data + txn ledger, DLQ."""
+        """foreachBatch body: split, then commit dead letters and good
+        rows, each under the batch's txn ledger."""
         import time as _time
 
-        t_start = _time.perf_counter()
         self.sync_schema()
-        planned = self.plan(self._apply_offset_floors(raw)).persist()
+        annotated = self._annotate(self._apply_offset_floors(raw)).persist()
         try:
-            good, dlq = self.split(planned)
+            live = ~F.col(SKIP_COL)
+            good, dlq = self.split(annotated.filter(live))
 
-            # Per-Kafka-partition last offsets → txn actions
-            # (reference src/delta_helpers.rs:15-40): DLQ'd AND
-            # empty/tombstone messages count as processed (the
-            # reference counts empties, src/lib.rs:847-852), so offsets
-            # come from the RAW batch — the planned frame has already
-            # dropped empty payloads, and a ledger built from it would
-            # understate progress on compacted topics and re-consume
-            # tombstone offsets after a seek.
-            # This is a second scan of raw, but column-pruned to the
-            # two int columns (partition, offset) — no payload decode.
-            # observe() can't replace it: per-partition max is a
-            # GROUPED aggregate, and observation metrics are scalar
-            # (a collect_list map-building workaround would buffer the
-            # whole batch per task). Measured cost is noise next to
-            # the parquet write (r6 verdict, What's wrong #4).
-            offsets = {
-                row["p"]: row["o"]
-                for row in raw.groupBy(F.col("partition").alias("p"))
-                .agg(F.max("offset").alias("o"))
+            # One aggregate decides the whole batch: per-Kafka-partition
+            # last offsets → txn actions (reference
+            # src/delta_helpers.rs:15-40), counting empty payloads as
+            # processed (src/lib.rs:847-852), plus the dead letters by
+            # cause — the reference keeps deserialization and coercion
+            # failures in separate counters (src/metrics.rs).
+            # coalesce(1) yields SinglePartition, which satisfies the
+            # grouping distribution: no exchange, so no AQE map-stage
+            # job. The decode stays parallel, because AQE first
+            # materializes the cache as its own stage at input width.
+            rows = (
+                annotated.coalesce(1)
+                .groupBy(F.col(META["partition"]).alias("p"))
+                .agg(
+                    F.max(META["offset"]).alias("o"),
+                    F.sum(
+                        (live & F.col(ERROR_COL).isNotNull()).cast("long")
+                    ).alias("n_deser"),
+                    F.sum(
+                        (live & F.col(ERROR_COL).isNull() & ~F.col(CONFORM_COL))
+                        .cast("long")
+                    ).alias("n_coerce"),
+                )
                 .collect()
-            }
-            txn = {f"{self.opts.app_id}-{p}": o for p, o in offsets.items()}
+            )
+            txn = {f"{self.opts.app_id}-{r['p']}": r["o"] for r in rows}
+            n_deser = sum(r["n_deser"] or 0 for r in rows)
+            n_coerce = sum(r["n_coerce"] or 0 for r in rows)
+
+            # Dead letters commit FIRST, under the same txn: a replay, or
+            # a restart after a crash before the data commit, finds the
+            # ledger stored in the DLQ table and skips them there.
+            if n_deser + n_coerce:
+                self.dlq.write(dlq, txn=txn)
 
             m = BatchMetrics()
-            result = self.table.write_batch(
-                good, partition_by=self.opts.partition_by or None, txn=txn
-            )
+            t_write = _time.perf_counter()
+            try:
+                result = self.table.write_batch(
+                    good, partition_by=self.opts.partition_by or None, txn=txn
+                )
+            except Exception:
+                self.metrics.count(DELTA_WRITE_FAILED)
+                raise
+            write_s = _time.perf_counter() - t_write
             m.version = result.version
             m.skipped = result.skipped
             m.delta_write_num_records = result.num_records
-            # One aggregate splits the DLQ by cause: rows that never
-            # parsed (deserialization) vs rows that parsed but failed
-            # schema coercion — the reference keeps these counters
-            # separate (src/metrics.rs), and conflating them makes the
-            # deserialization-failure dashboard spike on schema drift.
-            cause = dlq.agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    (
-                        F.col("error") == "FailedToCoerceToDestinationSchema"
-                    ).cast("long")
-                ).alias("n_coerce"),
-            ).collect()[0]
-            n_dlq = int(cause["n"] or 0)
-            n_coerce = int(cause["n_coerce"] or 0)
-            m.messages_deserialization_failed = n_dlq - n_coerce
+            m.messages_deserialization_failed = n_deser
             m.messages_transform_failed = n_coerce
             m.messages_deserialized = m.delta_write_num_records + n_coerce
-            self.dlq.write(dlq)
             # Continuous file sizing (opt-in): after every
             # auto_optimize_interval ingest commits, bin-pack small
             # files toward min_bytes_per_file — the Spark-idiomatic
@@ -425,19 +439,13 @@ class IngestJob:
                 deserialized=m.messages_deserialized,
                 deserialize_failed=m.messages_deserialization_failed,
                 transform_failed=n_coerce,
-                write_duration_s=_time.perf_counter() - t_start,
+                write_duration_s=write_s,
                 add_file_bytes=m.delta_add_file_size,
                 num_records=m.delta_write_num_records,
             )
             return m
         finally:
-            planned.unpersist()
-
-    @staticmethod
-    def dlq_count(dlq: DataFrame) -> int:
-        """Count dead letters (the per-cause split in process_batch
-        supersedes this in the hot path; kept for tests/tools)."""
-        return dlq.count()
+            annotated.unpersist()
 
     def run_batch(self, raw: DataFrame) -> BatchMetrics:
         """One-shot ingest of a static DataFrame (the reference's

@@ -64,6 +64,14 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
+# SparkContext.setJobGroup's thread-local properties.
+_JOB_GROUP_KEYS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
 def overlap(*thunks):
     """Run independent driver thunks (each typically submitting its
     own Spark jobs) CONCURRENTLY and return their results in order
@@ -74,13 +82,27 @@ def overlap(*thunks):
     moves — overlap the other leg's executor work).  With a single
     thunk, runs it inline.  The first exception (in argument order)
     propagates after every thunk has finished, so no leg is abandoned
-    mid-write."""
+    mid-write. Each leg runs under the caller's job group, so its jobs
+    are attributed to the same batch or query."""
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    group = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS} if sc else {}
+
+    def in_group(thunk):
+        def run():
+            for k, v in group.items():
+                sc.setLocalProperty(k, v)
+            return thunk()
+
+        return run
+
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(in_group(t)) for t in thunks]
         results, first_err = [], None
         for f in futures:
             try:

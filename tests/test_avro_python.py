@@ -148,7 +148,7 @@ def test_ingest_job_avro_message_path(spark):
     parsed = ap.parse_schema(schema_json)
     msgs = [
         (ap.encode({"id": i, "color": "red"}, parsed), 0, i) for i in range(10)
-    ] + [(b"\xff\xfe garbage", 0, 10)]
+    ] + [(b"\xff\xfe garbage", 0, 10), (b"", 0, 11)]
     raw = spark.createDataFrame(
         [
             (v, p, o, "t", __import__("datetime").datetime(2024, 1, 1), 0)
@@ -171,6 +171,7 @@ def test_ingest_job_avro_message_path(spark):
     )
     good, dlq = job.split(job.plan(raw))
     assert sorted(r.id for r in good.collect()) == list(range(10))
+    # the garbage payload is dead-lettered; the empty one is skipped
     assert dlq.count() == 1
 
 

@@ -226,6 +226,14 @@ def test_deserialization_failure_routes_to_dlq(spark, tmp_path):
             timestamp=None,
             timestampType=0,
         ),
+        Row(  # a partition holding only an empty payload
+            value=bytearray(b""),
+            partition=1,
+            offset=7,
+            topic="t",
+            timestamp=None,
+            timestampType=0,
+        ),
     ]
     m = job.run_batch(_raw_df(spark, rows))
     assert m.delta_write_num_records == 1
@@ -239,8 +247,83 @@ def test_deserialization_failure_routes_to_dlq(spark, tmp_path):
     assert base64.b64decode(row.base64_bytes) == b"this is not json"
     # offsets advance past bad AND empty messages: the tombstone at
     # offset 2 counts as processed (reference src/lib.rs:847-852), so
-    # the ledger records 2, not the last non-empty offset.
-    assert DeltaLikeTable(table).snapshot()["txn"] == {"app-0": 2}
+    # the ledger records 2, not the last non-empty offset; partition 1,
+    # which saw only an empty payload, still gets its entry.
+    assert DeltaLikeTable(table).snapshot()["txn"] == {"app-0": 2, "app-1": 7}
+
+
+def _dlq_batch(offsets):
+    """Good rows at even offsets, undecodable payloads at odd ones."""
+    return [
+        Row(
+            value=bytearray(
+                b'{"id": "%d"}' % o if o % 2 == 0 else b"not json %d" % o
+            ),
+            partition=0,
+            offset=o,
+            topic="t",
+            timestamp=None,
+            timestampType=0,
+        )
+        for o in offsets
+    ]
+
+
+def _dlq_opts(tmp_path):
+    return IngestOptions(
+        table_uri=str(tmp_path / "t"),
+        app_id="app",
+        dlq_table_location=str(tmp_path / "dlq"),
+    )
+
+
+def test_replayed_batch_does_not_repeat_dead_letters(spark, tmp_path):
+    """The DLQ commit carries the batch's txn map, so a replay of the
+    same batch appends no dead letter twice, as the data commit is
+    skipped too."""
+    opts = _dlq_opts(tmp_path)
+    job = IngestJob(opts, StructType([StructField("id", StringType())]))
+    raw = _raw_df(spark, _dlq_batch(range(6)))
+    assert job.run_batch(raw).messages_deserialization_failed == 3
+    replay = job.run_batch(raw)
+    assert replay.skipped
+    assert spark.read.parquet(opts.dlq_table_location).count() == 3
+    assert DeltaLikeTable(opts.table_uri).read(spark).count() == 3
+    assert DeltaLikeTable(opts.dlq_table_location).snapshot()["txn"] == {"app-0": 5}
+
+
+def test_crash_between_dlq_and_data_commit(spark, tmp_path):
+    """Dead letters commit before the data. A crash between the two
+    leaves the batch's offsets out of the data ledger, so a restarted
+    job re-runs the batch: the DLQ commit is skipped by its txn, the
+    data commits, and every message lands exactly once."""
+    import base64
+
+    opts = _dlq_opts(tmp_path)
+    schema = StructType([StructField("id", StringType())])
+    first, second = _dlq_batch(range(4)), _dlq_batch(range(4, 10))
+    job = IngestJob(opts, schema)
+    job.run_batch(_raw_df(spark, first))
+
+    def crash(*_a, **_k):
+        raise RuntimeError("killed after the DLQ commit")
+
+    job.table.write_batch = crash
+    with pytest.raises(RuntimeError, match="killed"):
+        job.run_batch(_raw_df(spark, second))
+    assert spark.read.parquet(opts.dlq_table_location).count() == 5
+
+    restarted = IngestJob(opts, schema)
+    for batch in (first, second):  # replay from before both batches
+        restarted.run_batch(_raw_df(spark, batch))
+    ids = sorted(int(r.id) for r in DeltaLikeTable(opts.table_uri).read(spark).collect())
+    assert ids == [0, 2, 4, 6, 8]
+    dead = sorted(
+        base64.b64decode(r.base64_bytes).decode()
+        for r in spark.read.parquet(opts.dlq_table_location).collect()
+    )
+    assert dead == sorted(f"not json {o}" for o in (1, 3, 5, 7, 9))
+    assert DeltaLikeTable(opts.table_uri).snapshot()["txn"] == {"app-0": 9}
 
 
 def test_coercion_failure_routes_to_dlq(spark, tmp_path):

@@ -324,10 +324,32 @@ def test_streaming_curation_matches_batch_pipeline(spark, tmp_path):
 
 def test_metrics_recorded_per_batch(spark, tmp_path):
     """M1: statsd-named counters emitted from the batch lifecycle."""
+    import time
+
+    import pytest
+
     from kafka_delta_ingest_spark import metrics as M
 
     opts = IngestOptions(topic="t", table_uri=str(tmp_path / "table"), app_id="m")
     job = IngestJob(opts, TABLE_SCHEMA)
+    # delta.write.duration times the table write alone: a slow DLQ
+    # write must not show in it
+    write_ms = []
+    inner_write = job.table.write_batch
+
+    def timed_write(*a, **k):
+        t = time.perf_counter()
+        try:
+            return inner_write(*a, **k)
+        finally:
+            write_ms.append((time.perf_counter() - t) * 1000.0)
+
+    def slow_dlq_write(*_a, **_k):
+        time.sleep(0.5)
+        return 0
+
+    job.table.write_batch = timed_write
+    job.dlq.write = slow_dlq_write
     rows = _rows(0, 8)
     rows[3] = Row(
         value=bytearray(b"{not json"),
@@ -346,7 +368,19 @@ def test_metrics_recorded_per_batch(spark, tmp_path):
     assert totals[M.MESSAGE_DESERIALIZATION_FAILED] == 1
     assert totals[M.RECORD_BATCH_COMPLETED] == 1
     assert totals[M.DELTA_WRITE_COMPLETED] == 1
-    assert M.DELTA_WRITE_DURATION in totals
+    assert write_ms[0] <= totals[M.DELTA_WRITE_DURATION] < write_ms[0] + 250
+
+    # delta.write.failed counts a table write that raises; the error
+    # still fails the batch
+    def failing_write(*_a, **_k):
+        raise OSError("object store unavailable")
+
+    job.table.write_batch = failing_write
+    with pytest.raises(OSError, match="unavailable"):
+        job.run_batch(spark.createDataFrame(_rows(8, 4), RAW_SCHEMA))
+    totals = job.metrics.totals()
+    assert totals[M.DELTA_WRITE_FAILED] == 1
+    assert totals[M.DELTA_WRITE_COMPLETED] == 1
 
 
 def test_watermark_drops_late_rows_across_restart(spark, tmp_path):
