@@ -286,6 +286,17 @@ def _bootstrap_pv_frame(spark, ddl: str, rows: list[tuple]):
     )
 
 
+def _file_id_col():
+    """The fileId of the base file a scanned row came from, read off
+    its spec name ``<fileId>_<writeToken>_<instant>.parquet`` (the
+    write token and instant hold no ``_``)."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_extract(
+        F.col("_metadata.file_name"), r"^(.+)_[^_]+_[^_]+\.parquet$", 1
+    )
+
+
 def _is_bootstrap_slice(base_path: str) -> bool:
     """True when a file group's LIVE slice is still its bootstrap
     skeleton (named ``<fileId>_*_00000000000001.parquet``). A later
@@ -1606,13 +1617,9 @@ class HudiCowWriter:
         bmap = bootstrap_mapping(self.path)
         if not bmap:
             return set()
-        try:
-            groups, _ = plan_file_groups(self.path)
-        except ValueError:
-            return set()
         return {
             fid
-            for (_p, fid), g in groups.items()
+            for (_p, fid), g in self._live_groups().items()
             if g["base"] and fid in bmap
             and _is_bootstrap_slice(g["base"])
         }
@@ -1728,6 +1735,104 @@ class HudiCowWriter:
         shutil.rmtree(staging, ignore_errors=True)
         return stats, n_files, n_records
 
+    def _live_groups(self) -> dict:
+        """:func:`plan_file_groups` of the latest snapshot; empty for a
+        table with no completed commit yet."""
+        try:
+            groups, _ = plan_file_groups(self.path)
+        except ValueError:
+            return {}
+        return groups
+
+    @staticmethod
+    def _live_slices(groups: dict) -> dict:
+        """fileId → (partition, live base path, base instant, next log
+        version) for every file group with a live base file: the
+        driver-side metadata the keyed writes' executor legs need."""
+        return {
+            fid: (
+                part,
+                g["base"],
+                os.path.basename(g["base"])[: -len(".parquet")]
+                .split("_")[-1],
+                len(g["logs"]) + 1,
+            )
+            for (part, fid), g in groups.items()
+            if g["base"]
+        }
+
+    def _match_source(self, df, precombine: str | None, groups: dict):
+        """Match discovery shared by the keyed writes. Returns (source,
+        distinct-key count): the source materialized once and tagged
+        ``__pp``/``__rk`` plus ``__fid``, the file group whose live
+        base file holds that key (NULL for a new key).
+
+        Without ``precombine`` a duplicate ``(__pp, __rk)`` raises
+        before any base file is read. The probe then runs the other way
+        round from a table-wide join: the live base files' key columns
+        stream past a broadcast of the batch's keys, so at most one row
+        per batch key leaves the scan and nothing on the table side
+        crosses an exchange (Hudi's index lookup, sized by the batch).
+        Both broadcasts, the keys and the matches, are bounded by the
+        micro-batch, the same bound the source's ``localCheckpoint``
+        already assumes. The fileId comes from the base file's spec
+        name ``<fileId>_<writeToken>_<instant>.parquet``, so resolving
+        it costs no job."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.window import Window
+
+        src = df.withColumn("__pp", self._part_path_col()).withColumn(
+            "__rk", F.col(self.record_key).cast("string")
+        )
+        if precombine is not None:
+            w = Window.partitionBy("__pp", "__rk").orderBy(
+                F.col(precombine).desc()
+            )
+            src = (
+                src.withColumn("__rn", F.row_number().over(w))
+                .filter("__rn = 1").drop("__rn")
+            )
+        # One eager materialization: the batch lineage (typically an
+        # aggregation + join upstream) would otherwise re-run for every
+        # consumer below. O(batch), micro-batch-sized at any table size.
+        src = src.localCheckpoint()
+        # coalesce(1) yields SinglePartition, which satisfies the
+        # grouping distribution: no exchange, so no AQE map-stage job.
+        # One job answers both the duplicate-key check and emptiness.
+        n_keys, widest = (
+            src.coalesce(1).groupBy("__pp", "__rk").count()
+            .agg(F.count(F.lit(1)), F.max("count")).first()
+        )
+        if (widest or 0) > 1:
+            raise ValueError(
+                "duplicate record keys in upsert source and no "
+                "precombine field given"
+            )
+        bases = sorted(g["base"] for g in groups.values() if g["base"])
+        if not n_keys or not bases:
+            no_fid = F.lit(None).cast("string")
+            return src.withColumn("__fid", no_fid), n_keys
+        live = (
+            df.sparkSession.read.schema(
+                "_hoodie_partition_path string, _hoodie_record_key string"
+            )
+            .parquet(*bases)
+            .select(
+                F.col("_hoodie_partition_path").alias("__pp"),
+                F.col("_hoodie_record_key").alias("__rk"),
+                _file_id_col().alias("__fid"),
+            )
+        )
+        matched = live.join(
+            F.broadcast(src.select("__pp", "__rk")), ["__pp", "__rk"]
+        )
+        # Equivalent to a lookup because a live (__pp, __rk) owns
+        # exactly one file group (the upsert invariant these writers
+        # maintain).
+        return src.join(
+            F.broadcast(matched), ["__pp", "__rk"], "left"
+        ).localCheckpoint(), n_keys
+
     def upsert_batch(self, df, precombine: str | None = None,
                      extra_metadata: dict | None = None):
         """Hudi's signature operation — CoW UPSERT of a DataFrame:
@@ -1742,14 +1847,13 @@ class HudiCowWriter:
         ``precombine.field``): per key, the source row with the
         highest value wins. Without it, duplicate source keys raise.
 
-        Scale contract: match discovery is a column-pruned scan of the
-        key + partition-path columns only over live base files,
-        equi-joined against the (distinct, AQE-broadcastable) source
-        keys — the Spark-native analog of Hudi's bloom-index lookup;
-        the rewrite then reads ONLY the matched file groups. Cost is
-        O(touched groups + source), never O(table). One slice per
-        group: the rewrite repartitions on fileId so each group lands
-        as exactly one new base file.
+        Scale contract: match discovery (:meth:`_match_source`) probes
+        the live base files' key columns with a broadcast of the
+        batch's keys — the Spark-native analog of Hudi's index lookup,
+        with no table-side shuffle; the rewrite then reads ONLY the
+        matched file groups. Cost is O(touched groups + source), never
+        O(table). One slice per group: the rewrite repartitions on
+        fileId so each group lands as exactly one new base file.
 
         Reference: the daemon is append-only; this is the
         DeltaStreamer UPSERT-mode parity surface (operationType
@@ -1762,7 +1866,6 @@ class HudiCowWriter:
         import pyarrow.parquet as pq
 
         from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
 
         if not self.record_key:
             raise ValueError(
@@ -1770,93 +1873,28 @@ class HudiCowWriter:
                 "(HudiCowWriter(record_key=...))"
             )
         spark = df.sparkSession
-        key = self.record_key
-
-        # r12 (optimization): materialize the source batch ONCE. The
-        # batch lineage (typically an aggregation + join upstream) was
-        # re-executed by every consumer below — the empty check, the
-        # duplicate-key probe, match discovery's distinct keys, the
-        # merge leg and the not-matched anti-join: five runs of the
-        # same shuffles. One eager localCheckpoint is O(batch) —
-        # micro-batch-sized at any table size — and every later pass
-        # is a scan of the materialized rows.
-        src = df.withColumn("__pp", self._part_path_col()).withColumn(
-            "__rk", F.col(key).cast("string")
-        ).localCheckpoint()
-        if src.isEmpty():
-            return None, 0, 0
-        if precombine is not None:
-            w = Window.partitionBy("__pp", "__rk").orderBy(
-                F.col(precombine).desc()
-            )
-            src = (
-                src.withColumn("__rn", F.row_number().over(w))
-                .filter("__rn = 1").drop("__rn")
-            )
-        else:
-            dup = (
-                src.groupBy("__pp", "__rk")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter("n > 1").limit(1).collect()
-            )
-            if dup:
-                raise ValueError(
-                    "duplicate record keys in upsert source and no "
-                    "precombine field given"
-                )
-
-        hoodie = os.path.join(self.path, ".hoodie")
-        try:
-            groups, _ = plan_file_groups(self.path)
-        except ValueError:
-            groups = {}  # brand-new table: pure insert
+        groups = self._live_groups()
         if any(g["logs"] for g in groups.values()):
             raise ValueError("CoW upsert on a table with MoR logs")
-        # driver map: abs base path -> (partition, fileId, sliceInstant)
-        by_base: dict[str, tuple[str, str, str]] = {}
-        for (part, fid), g in groups.items():
-            if g["base"]:
-                slice_instant = os.path.basename(
-                    g["base"]
-                )[: -len(".parquet")].split("_")[-1]
-                by_base[g["base"]] = (part, fid, slice_instant)
+        src, n_keys = self._match_source(df, precombine, groups)
+        if not n_keys:
+            return None, 0, 0
+        by_fid = self._live_slices(groups)
+        is_new = F.col("__fid").isNull()
+        touched: set = set()
+        if by_fid:
+            # same SinglePartition argument as the key aggregate: one job
+            touched = {
+                r[0]
+                for r in src.filter(~is_new).coalesce(1)
+                .select("__fid").distinct().collect()
+            }
 
+        hoodie = os.path.join(self.path, ".hoodie")
         instant = self._claim_instant(self.ACTION)
         self.store.put_atomic(
             os.path.join(hoodie, f"{instant}.{self.ACTION}.inflight"), b""
         )
-
-        matched_keys = None
-        touched: set = set()
-        if by_base:
-            # bloom-index analog: key + partition-path columns ONLY
-            live_keys = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*sorted(by_base))
-                .select(
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:(//)?", ""
-                    ).alias("__fp"),
-                    F.col("_hoodie_partition_path").alias("__pp"),
-                    F.col("_hoodie_record_key").alias("__rk"),
-                )
-            )
-            src_keys = src.select("__pp", "__rk").distinct()
-            # ONE materialized pass over the base key columns (r13):
-            # the match set serves both touched-file discovery and the
-            # not-matched anti-join below. Previously the anti-join
-            # consumed a lazy all-live-keys distinct, re-scanning
-            # every base file's key columns a second time. Equivalent:
-            # a src row matches a live key iff its (__pp, __rk) is in
-            # live ∩ src-keys — exactly this join's output.
-            m = live_keys.join(
-                src_keys, ["__pp", "__rk"], "inner"
-            ).localCheckpoint()
-            touched = {
-                r["__fp"]
-                for r in m.select("__fp").distinct().collect()
-            }
-            matched_keys = m.select("__pp", "__rk").distinct()
 
         def _update_leg() -> dict:
             """Rewrite every touched file group (one new base-file
@@ -1872,39 +1910,27 @@ class HudiCowWriter:
             # group ordinary from this instant on (the bootstrap
             # index entry stays, serving time-travel reads).
             bmap = bootstrap_mapping(self.path)
-            boot_paths = sorted(
-                p for p in touched
-                if by_base[p][1] in bmap
-                and _is_bootstrap_slice(p)
+            boot = sorted(
+                fid for fid in touched
+                if fid in bmap and _is_bootstrap_slice(by_fid[fid][1])
             )
             norm_paths = sorted(
-                p for p in touched if p not in set(boot_paths)
-            )
-            fid_map = metadata_df(
-                spark,
-                [(p, *by_base[p]) for p in sorted(touched)],
-                "__fp string, __part string, "
-                "__fid string, __prev string",
+                by_fid[fid][1] for fid in touched - set(boot)
             )
             tgt = None
             if norm_paths:
                 tgt = spark.read.option(
                     "mergeSchema", "true"
                 ).parquet(*norm_paths).select(
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"),
-                        "^file:(//)?", ""
-                    ).alias("__fp"),
+                    _file_id_col().alias("__fid"),
                     F.col("_hoodie_partition_path").alias("__pp"),
                     F.col("_hoodie_record_key").alias("__rk"),
                     "*",
-                ).join(F.broadcast(fid_map), "__fp").drop(
-                    "__fp", "__part", "__prev"
                 )
-            if boot_paths:
+            if boot:
                 bt = _bootstrap_zip(
                     spark,
-                    [(by_base[p][1], p) for p in boot_paths],
+                    [(fid, by_fid[fid][1]) for fid in boot],
                     bmap,
                     fid_alias="__fid",
                     # partitioned-source bootstrap: reattach the
@@ -1921,9 +1947,14 @@ class HudiCowWriter:
                 tgt = bt if tgt is None else tgt.unionByName(
                     bt, allowMissingColumns=True
                 )
-            src_m = src.withColumn("__m", F.lit(True))
+            # the matched source rows are bounded by the micro-batch:
+            # broadcast them, so the touched groups' rows only cross
+            # the fileId repartition below
+            src_m = src.filter(~is_new).drop("__fid").withColumn(
+                "__m", F.lit(True)
+            )
             joined = tgt.alias("t").join(
-                src_m.alias("s"), ["__pp", "__rk"], "left"
+                F.broadcast(src_m).alias("s"), ["__pp", "__rk"], "left"
             )
             is_m = F.col("__m").isNotNull()
             data_cols = [
@@ -1974,10 +2005,6 @@ class HudiCowWriter:
             merged.repartition("__kdi_fid").write.mode(
                 "overwrite"
             ).partitionBy("__kdi_fid").parquet(staging)
-            fid_meta = {
-                fid: (part, prev)
-                for _p, (part, fid, prev) in by_base.items()
-            }
             for dirpath, _dirs, files in os.walk(staging):
                 rel = os.path.relpath(dirpath, staging)
                 if rel == ".":
@@ -1993,7 +2020,7 @@ class HudiCowWriter:
                         f"file group {fid}: expected one slice "
                         f"file, got {len(parquets)}"
                     )
-                part, prev = fid_meta[fid]
+                part, _base, prev, _v = by_fid[fid]
                 src_f = os.path.join(dirpath, parquets[0])
                 md = pq.ParquetFile(src_f).metadata
                 new_name = f"{fid}_0-1-0_{instant}.parquet"
@@ -2022,11 +2049,7 @@ class HudiCowWriter:
 
         def _insert_leg() -> tuple[dict, int]:
             """Not-matched leg: new file groups, real record keys."""
-            ins = src
-            if matched_keys is not None:
-                ins = src.join(
-                    matched_keys, ["__pp", "__rk"], "left_anti"
-                )
+            ins = src.filter(is_new)
             seqno_i = F.concat_ws(
                 "_",
                 F.lit(instant),
@@ -2045,9 +2068,9 @@ class HudiCowWriter:
             return st, n_files
 
         # r13 (guide §2.6): the two legs are independent once the
-        # match set is materialized — both consume only checkpointed
-        # frames (src, m) and write to distinct staging dirs. Running
-        # them from two driver threads lets each leg's driver-side
+        # match set is materialized — both consume only the
+        # checkpointed source and write to distinct staging dirs.
+        # Running them from two driver threads lets each leg's driver-side
         # phases (staging walk, parquet-footer reads, file moves) and
         # task tails back-fill with the other leg's work; previously
         # the insert leg's whole job waited for the update leg's
@@ -2273,6 +2296,12 @@ class HudiMorWriter(HudiCowWriter):
     group's blocks into a new base-file slice as a ``.commit`` (the
     slice reset :func:`plan_file_groups` already replays).
 
+    Match discovery is the inherited :meth:`_match_source`: one
+    aggregate over the materialized batch checks its keys, then the
+    live base files' key columns are probed with a broadcast of those
+    keys, and the owning fileId is read off each base file's name. No
+    table-side key crosses an exchange.
+
     Log blocks are encoded EXECUTOR-SIDE: the matched updates
     repartition on fileId and one ``applyInPandas`` task per group
     encodes its Avro data block (the pure-Python HoodieLogFormat
@@ -2338,109 +2367,6 @@ class HudiMorWriter(HudiCowWriter):
                 dt.add(f.name)
         return ts, dt
 
-    def _group_plan(self):
-        """(abs base path → (partition, fileId)), plus per-fileId
-        (partition, baseInstant, next log version) — the driver-side
-        metadata the executor log writers need."""
-        try:
-            groups, _ = plan_file_groups(self.path)
-        except ValueError:
-            return {}, {}
-        by_base, fid_meta = {}, {}
-        for (part, fid), g in groups.items():
-            if not g["base"]:
-                continue
-            base_instant = os.path.basename(
-                g["base"]
-            )[: -len(".parquet")].split("_")[-1]
-            by_base[g["base"]] = (part, fid)
-            fid_meta[fid] = (part, base_instant, len(g["logs"]) + 1)
-        return by_base, fid_meta
-
-    def _split_matched(self, df, precombine):
-        """(matched rows tagged __fid/__pp/__rk, unmatched rows,
-        fid_meta, materialized source) — match discovery is the CoW
-        upsert's column-pruned
-        key scan over live base files."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
-
-        spark = df.sparkSession
-
-        # r13 (guide §2.6): the source materialization (+ duplicate
-        # probe) and the live-base key scan are INDEPENDENT — the one
-        # reads the incoming batch's lineage, the other the table's
-        # base files — so they run from two driver threads; previously
-        # they were three sequential driver-blocking jobs.
-        def _src_leg():
-            # r12: one eager materialization of the source batch — its
-            # lineage was re-executed by the duplicate probe, the
-            # matched join AND the unmatched anti-join (see
-            # upsert_batch).
-            s = df.withColumn("__pp", self._part_path_col()).withColumn(
-                "__rk", F.col(self.record_key).cast("string")
-            ).localCheckpoint()
-            if precombine is not None:
-                w = Window.partitionBy("__pp", "__rk").orderBy(
-                    F.col(precombine).desc()
-                )
-                s = (
-                    s.withColumn("__rn", F.row_number().over(w))
-                    .filter("__rn = 1").drop("__rn")
-                )
-            else:
-                dup = (
-                    s.groupBy("__pp", "__rk")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .filter("n > 1").limit(1).collect()
-                )
-                if dup:
-                    raise ValueError(
-                        "duplicate record keys in source and no "
-                        "precombine field given"
-                    )
-            return s
-
-        def _keyed_leg():
-            by_base, fid_meta = self._group_plan()
-            if not by_base:
-                return None, fid_meta
-            live_keys = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*sorted(by_base))
-                .select(
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:(//)?", ""
-                    ).alias("__fp"),
-                    F.col("_hoodie_partition_path").alias("__pp"),
-                    F.col("_hoodie_record_key").alias("__rk"),
-                )
-            )
-            fid_rows = [(p, *by_base[p]) for p in sorted(by_base)]
-            fid_map = metadata_df(
-                spark, fid_rows,
-                "__fp string, __part string, __fid string",
-            )
-            k = live_keys.join(F.broadcast(fid_map), "__fp").select(
-                "__pp", "__rk", "__fid"
-            ).localCheckpoint()
-            return k, fid_meta
-
-        src, (keyed, fid_meta) = overlap(_src_leg, _keyed_leg)
-        if keyed is None:
-            return None, src, fid_meta, src
-        # r12: ONE left join, materialized once, then split by __fid
-        # nullability — the previous inner + anti pair executed the
-        # live-keys base scan and the join twice (once per consumer).
-        # Equivalent because a live (__pp, __rk) owns exactly one file
-        # group (the upsert invariant this writer maintains).
-        joined = src.join(
-            keyed, ["__pp", "__rk"], "left"
-        ).localCheckpoint()
-        matched = joined.filter(F.col("__fid").isNotNull())
-        unmatched = joined.filter(F.col("__fid").isNull()).drop("__fid")
-        return matched, unmatched, fid_meta, src
-
     def upsert_log_batch(self, df, precombine: str | None = None,
                          extra_metadata: dict | None = None,
                          skip_if_stored: dict | None = None,
@@ -2473,13 +2399,13 @@ class HudiMorWriter(HudiCowWriter):
         avro_schema = self._avro_schema_of(df)
         data_cols = list(df.columns)
         ts_cols, date_cols = self._temporal_cols(df.schema)
-        matched, unmatched, fid_meta, src = self._split_matched(
-            df, precombine
-        )
-        # empty check on the MATERIALIZED source (r12): df.isEmpty()
-        # re-ran the whole batch lineage just to probe one row.
-        if src.isEmpty():
+        groups = self._live_groups()
+        src, n_keys = self._match_source(df, precombine, groups)
+        if not n_keys:
             return None, 0, 0, 0
+        fid_meta = self._live_slices(groups)
+        matched = src.filter(F.col("__fid").isNotNull())
+        unmatched = src.filter(F.col("__fid").isNull()).drop("__fid")
 
         hoodie = os.path.join(self.path, ".hoodie")
         instant = self._claim_instant(self.ACTION)
@@ -2531,7 +2457,7 @@ class HudiMorWriter(HudiCowWriter):
 
         def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
             fid = pdf["__fid"].iloc[0]
-            part, base_instant, version = fid_meta[fid]
+            part, _base, base_instant, version = fid_meta[fid]
             recs = _records(pdf)
             block = encode_log_block(
                 BLOCK_AVRO_DATA,
@@ -2561,7 +2487,7 @@ class HudiMorWriter(HudiCowWriter):
             )
 
         def _log_leg() -> list:
-            if matched is None:
+            if not fid_meta:
                 return []
             return (
                 matched
@@ -2596,7 +2522,7 @@ class HudiMorWriter(HudiCowWriter):
             return st, n_files
 
         # r13 (guide §2.6): both legs read only the materialized
-        # _split_matched frames and write disjoint files (log blocks
+        # _match_source frame and write disjoint files (log blocks
         # into existing group dirs vs a fresh staging dir), so they
         # run from two driver threads — the Arrow log-encode tasks
         # back-fill the insert write's tail and vice versa.
@@ -2652,16 +2578,16 @@ class HudiMorWriter(HudiCowWriter):
         read view; compact() folds them into a full slice."""
         import pandas as pd
 
+        from pyspark.sql import functions as F
+
         if not self.record_key:
             raise ValueError(
                 "delete_log_batch requires the writer's record_key"
             )
-        matched, _unmatched, fid_meta, src = self._split_matched(
-            df.dropDuplicates(), None
-        )
-        if src.isEmpty():
-            return None, 0
-        if matched is None:
+        groups = self._live_groups()
+        fid_meta = self._live_slices(groups)
+        src, n_keys = self._match_source(df.dropDuplicates(), None, groups)
+        if not n_keys or not fid_meta:
             return None, 0
 
         hoodie = os.path.join(self.path, ".hoodie")
@@ -2674,7 +2600,7 @@ class HudiMorWriter(HudiCowWriter):
 
         def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
             fid = pdf["__fid"].iloc[0]
-            part, base_instant, version = fid_meta[fid]
+            part, _base, base_instant, version = fid_meta[fid]
             block = encode_log_block(
                 BLOCK_DELETE,
                 {HDR_INSTANT_TIME: instant},
@@ -2702,7 +2628,8 @@ class HudiMorWriter(HudiCowWriter):
             )
 
         log_stats = (
-            matched.select("__fid", "__rk").dropDuplicates()
+            src.filter(F.col("__fid").isNotNull())
+            .select("__fid", "__rk")
             .groupBy("__fid")
             .applyInPandas(
                 write_group,

@@ -370,7 +370,8 @@ class IngestJob:
             # src/delta_helpers.rs:15-40), counting empty payloads as
             # processed (src/lib.rs:847-852), plus the dead letters by
             # cause — the reference keeps deserialization and coercion
-            # failures in separate counters (src/metrics.rs).
+            # failures in separate counters (src/metrics.rs) — and the
+            # payload bytes (empty payloads add none).
             # coalesce(1) yields SinglePartition, which satisfies the
             # grouping distribution: no exchange, so no AQE map-stage
             # job. The decode stays parallel, because AQE first
@@ -387,12 +388,14 @@ class IngestJob:
                         (live & F.col(ERROR_COL).isNull() & ~F.col(CONFORM_COL))
                         .cast("long")
                     ).alias("n_coerce"),
+                    F.sum(F.length(RAW_COL)).alias("n_bytes"),
                 )
                 .collect()
             )
             txn = {f"{self.opts.app_id}-{r['p']}": r["o"] for r in rows}
             n_deser = sum(r["n_deser"] or 0 for r in rows)
             n_coerce = sum(r["n_coerce"] or 0 for r in rows)
+            n_bytes = sum(r["n_bytes"] or 0 for r in rows)
 
             # Dead letters commit FIRST, under the same txn: a replay, or
             # a restart after a crash before the data commit, finds the
@@ -441,7 +444,7 @@ class IngestJob:
                 transform_failed=n_coerce,
                 write_duration_s=write_s,
                 add_file_bytes=m.delta_add_file_size,
-                num_records=m.delta_write_num_records,
+                message_bytes=n_bytes,
             )
             return m
         finally:

@@ -91,15 +91,14 @@ class IngestMetrics:
         transform_failed: int,
         write_duration_s: float,
         add_file_bytes: int,
-        num_records: int,
+        message_bytes: int,
     ) -> None:
         self.count(RECORD_BATCH_STARTED)
-        # ``deserialized`` is messages attempted; completed excludes the
-        # failures (reference increments per-message on each outcome).
-        ok = deserialized - deserialize_failed
-        self.count(MESSAGE_DESERIALIZED, ok)
+        # ``deserialized`` already excludes the deserialization failures
+        # (reference increments per-message on each outcome).
+        self.count(MESSAGE_DESERIALIZED, deserialized)
         self.count(MESSAGE_DESERIALIZATION_FAILED, deserialize_failed)
-        self.count(MESSAGE_TRANSFORM_COMPLETED, ok - transform_failed)
+        self.count(MESSAGE_TRANSFORM_COMPLETED, deserialized - transform_failed)
         self.count(MESSAGE_TRANSFORM_FAILED, transform_failed)
         self.count(RECORD_BATCH_COMPLETED)
         self.count(DELTA_WRITE_STARTED)
@@ -107,7 +106,8 @@ class IngestMetrics:
         self.timer_ms(DELTA_WRITE_DURATION, write_duration_s * 1000.0)
         self.gauge(DELTA_ADD_FILE_SIZE, add_file_bytes)
         self.gauge(BUFFERED_RECORD_BATCHES, 0)
-        self.count(MESSAGE_SIZE, num_records)
+        # payload bytes of the batch's messages
+        self.count(MESSAGE_SIZE, message_bytes)
 
     def totals(self) -> dict[str, float]:
         out: dict[str, float] = {}

@@ -10,7 +10,10 @@ from kafka_delta_ingest_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("kdi-tests", cpus=int(os.environ.get("TEST_CPUS", "8")))
+    # An explicit TEST_CPUS wins; otherwise get_spark sizes the session
+    # from SPARK_GRAFT_CPUS, else the machine's core count.
+    cpus = os.environ.get("TEST_CPUS")
+    s = get_spark("kdi-tests", cpus=int(cpus) if cpus else None)
     yield s
 
 

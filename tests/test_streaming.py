@@ -359,13 +359,26 @@ def test_metrics_recorded_per_batch(spark, tmp_path):
         timestamp=datetime.datetime(2024, 1, 1),
         timestampType=0,
     )
+    rows.append(
+        Row(
+            value=bytearray(b""),
+            partition=1,
+            offset=101,
+            topic="t",
+            timestamp=datetime.datetime(2024, 1, 1),
+            timestampType=0,
+        )
+    )
     job.run_batch(spark.createDataFrame(rows, RAW_SCHEMA))
     totals = job.metrics.totals()
-    # 8 attempted, 1 corrupt, 1 empty tombstone: the success counter
-    # counts messages that actually deserialized — failures and skipped
-    # empties are not "deserialized".
-    assert totals[M.MESSAGE_DESERIALIZED] == 6
+    # 9 messages: 7 clean, 1 corrupt, 1 empty tombstone. The success
+    # counter counts messages that actually deserialized — the failure
+    # and the skipped tombstone are not "deserialized".
+    assert totals[M.MESSAGE_DESERIALIZED] == 7
     assert totals[M.MESSAGE_DESERIALIZATION_FAILED] == 1
+    assert totals[M.MESSAGE_TRANSFORM_COMPLETED] == 7
+    # messages.size is payload bytes, not a record count
+    assert totals[M.MESSAGE_SIZE] == sum(len(r.value) for r in rows) == 187
     assert totals[M.RECORD_BATCH_COMPLETED] == 1
     assert totals[M.DELTA_WRITE_COMPLETED] == 1
     assert write_ms[0] <= totals[M.DELTA_WRITE_DURATION] < write_ms[0] + 250
