@@ -1762,10 +1762,12 @@ class HudiCowWriter:
         }
 
     def _match_source(self, df, precombine: str | None, groups: dict):
-        """Match discovery shared by the keyed writes. Returns (source,
-        distinct-key count): the source materialized once and tagged
-        ``__pp``/``__rk`` plus ``__fid``, the file group whose live
-        base file holds that key (NULL for a new key).
+        """Match discovery shared by the keyed writes. Returns (tagged,
+        source, distinct-key count). ``source`` is the batch
+        materialized once with ``__pp``/``__rk``, one row per key.
+        ``tagged`` adds ``__fid``, the file group whose live base file
+        holds the key (NULL for a new key): one row per live match, so
+        a key live in two groups appears twice there.
 
         Without ``precombine`` a duplicate ``(__pp, __rk)`` raises
         before any base file is read. The probe then runs the other way
@@ -1811,7 +1813,7 @@ class HudiCowWriter:
         bases = sorted(g["base"] for g in groups.values() if g["base"])
         if not n_keys or not bases:
             no_fid = F.lit(None).cast("string")
-            return src.withColumn("__fid", no_fid), n_keys
+            return src.withColumn("__fid", no_fid), src, n_keys
         live = (
             df.sparkSession.read.schema(
                 "_hoodie_partition_path string, _hoodie_record_key string"
@@ -1826,12 +1828,12 @@ class HudiCowWriter:
         matched = live.join(
             F.broadcast(src.select("__pp", "__rk")), ["__pp", "__rk"]
         )
-        # Equivalent to a lookup because a live (__pp, __rk) owns
-        # exactly one file group (the upsert invariant these writers
-        # maintain).
-        return src.join(
+        # A key owns one file group under upserts, but insert_batch
+        # appends without a key check, so it may match several.
+        tagged = src.join(
             F.broadcast(matched), ["__pp", "__rk"], "left"
-        ).localCheckpoint(), n_keys
+        ).localCheckpoint()
+        return tagged, src, n_keys
 
     def upsert_batch(self, df, precombine: str | None = None,
                      extra_metadata: dict | None = None):
@@ -1876,7 +1878,7 @@ class HudiCowWriter:
         groups = self._live_groups()
         if any(g["logs"] for g in groups.values()):
             raise ValueError("CoW upsert on a table with MoR logs")
-        src, n_keys = self._match_source(df, precombine, groups)
+        tagged, src, n_keys = self._match_source(df, precombine, groups)
         if not n_keys:
             return None, 0, 0
         by_fid = self._live_slices(groups)
@@ -1886,7 +1888,7 @@ class HudiCowWriter:
             # same SinglePartition argument as the key aggregate: one job
             touched = {
                 r[0]
-                for r in src.filter(~is_new).coalesce(1)
+                for r in tagged.filter(~is_new).coalesce(1)
                 .select("__fid").distinct().collect()
             }
 
@@ -1947,14 +1949,11 @@ class HudiCowWriter:
                 tgt = bt if tgt is None else tgt.unionByName(
                     bt, allowMissingColumns=True
                 )
-            # the matched source rows are bounded by the micro-batch:
-            # broadcast them, so the touched groups' rows only cross
-            # the fileId repartition below
-            src_m = src.filter(~is_new).drop("__fid").withColumn(
-                "__m", F.lit(True)
-            )
+            # the key-unique source, so each target row (a key live
+            # in two groups included) matches at most one source row
+            src_m = src.withColumn("__m", F.lit(True))
             joined = tgt.alias("t").join(
-                F.broadcast(src_m).alias("s"), ["__pp", "__rk"], "left"
+                src_m.alias("s"), ["__pp", "__rk"], "left"
             )
             is_m = F.col("__m").isNotNull()
             data_cols = [
@@ -2049,7 +2048,7 @@ class HudiCowWriter:
 
         def _insert_leg() -> tuple[dict, int]:
             """Not-matched leg: new file groups, real record keys."""
-            ins = src.filter(is_new)
+            ins = tagged.filter(is_new)
             seqno_i = F.concat_ws(
                 "_",
                 F.lit(instant),
@@ -2400,7 +2399,7 @@ class HudiMorWriter(HudiCowWriter):
         data_cols = list(df.columns)
         ts_cols, date_cols = self._temporal_cols(df.schema)
         groups = self._live_groups()
-        src, n_keys = self._match_source(df, precombine, groups)
+        src, _, n_keys = self._match_source(df, precombine, groups)
         if not n_keys:
             return None, 0, 0, 0
         fid_meta = self._live_slices(groups)
@@ -2586,7 +2585,9 @@ class HudiMorWriter(HudiCowWriter):
             )
         groups = self._live_groups()
         fid_meta = self._live_slices(groups)
-        src, n_keys = self._match_source(df.dropDuplicates(), None, groups)
+        src, _, n_keys = self._match_source(
+            df.dropDuplicates(), None, groups
+        )
         if not n_keys or not fid_meta:
             return None, 0
 

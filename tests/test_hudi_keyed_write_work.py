@@ -50,9 +50,9 @@ def test_cow_upsert_job_count(spark, tmp_path):
     assert (n_upd, n_ins) == (1, 1)
     # source checkpoint, key aggregate, key broadcast, probe scan,
     # matched-source checkpoint, touched fileIds; the update leg's
-    # footer merge, matched-row broadcast, fileId repartition and
-    # rewrite; the insert write
-    assert len(tasks) == 11, tasks
+    # footer merge, four AQE stages of its merge join and fileId
+    # repartition, and the rewrite; the insert write
+    assert len(tasks) == 13, tasks
     assert read_hudi(spark, w.path).count() == 2500
 
 
@@ -114,3 +114,17 @@ def test_duplicate_keys_raise_before_any_base_file_scan(
     assert len(tasks) <= 2, tasks
     # no instant was claimed: no .requested or .inflight left behind
     assert _timeline(w) == timeline
+
+
+def test_cow_upsert_of_a_key_live_twice_keeps_its_row_count(spark, tmp_path):
+    # insert_batch appends without a key check, so key 5 is live in two
+    # file groups; the upsert replaces it in both and adds no row.
+    w = HudiCowWriter(str(tmp_path / "twice"), record_key="id")
+    w.insert_batch(_rows(spark, 0, 10))
+    w.insert_batch(_rows(spark, 5, 6))
+    upd = spark.createDataFrame([(5, "new", 5.0)], "id long, s string, v double")
+    _instant, n_upd, n_ins = w.upsert_batch(upd)
+    assert (n_upd, n_ins) == (2, 0)
+    out = read_hudi(spark, w.path)
+    assert out.count() == 11
+    assert sorted(r.s for r in out.filter("id = 5").collect()) == ["new", "new"]
